@@ -119,7 +119,7 @@ def main() -> None:
         )
         t0 = time.monotonic()
         CDCPipeline(spark, cfg_f).run_delta_feed(
-            f"{base}/feed{rep}", available_now=True, impl="merge"
+            f"{base}/feed{rep}", available_now=True
         )
         s = time.monotonic() - t0
         feed_s = s if feed_s is None else min(feed_s, s)

@@ -1,10 +1,10 @@
 #!/usr/bin/env python
 """Two-cluster-size scaling evidence, multi-JVM executor analogue.
 
-The r1 protocol (bench/scaling.py) grew ONE JVM from local[4] to local[16].
-That conflates executor scaling with single-process limits (shared heap, GC,
-one memory-allocator arena), and this oversubscribed VM's own envelope tops
-out at ~3.3x for 4->16 *cores*.  The truer analogue of adding executors —
+The r1 protocol (bench/scaling.py, since deleted) grew ONE JVM from local[4]
+to local[16].  That conflates executor scaling with single-process limits
+(shared heap, GC, one memory-allocator arena), and this oversubscribed VM's
+own envelope tops out at ~3.3x for 4->16 *cores*.  The truer analogue of adding executors —
 endorsed by the r1 review — is adding whole pinned JVMs:
 
     config A (N):  1 JVM x local[2], pinned to 2 cpus, 6g heap — all shards
@@ -158,7 +158,7 @@ def hardware_envelope(n_a: int, n_b: int, work: int = 3_000_000, reps: int = 2) 
 
 
 R1_HISTORY = """\
-## Appendix: r1 single-JVM protocol history (bench/scaling.py)
+## Appendix: r1 single-JVM protocol history (bench/scaling.py, deleted)
 
 One JVM grown local[4] -> local[16] (taskset-pinned, heap scaled), same
 seeded 32M-event input; kept for comparability:
@@ -386,8 +386,8 @@ so the measurement reflects the engine.  Each JVM replays {reps}x (rep 1
 warms JIT), best-of per JVM; config B throughput = total events / slowest
 executor's best (the slowest executor bounds a stage, as on a real cluster).
 
-Sink path: **parquet-cow fallback** (no Iceberg runtime jar in the sandbox;
-IcebergLakeTable carries the MERGE INTO path for cluster runs).
+Sink path: **parquet-cow** (ParquetLakeTable, the only sink; an Iceberg
+MERGE INTO sink waits on an iceberg-spark-runtime jar).
 
 ## Results
 

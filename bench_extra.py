@@ -105,7 +105,7 @@ def main() -> None:
             spark.sparkContext.setJobDescription("cdc_delta_feed")
             t0 = time.monotonic()
             CDCPipeline(spark, cfg_f).run_delta_feed(
-                f"{base}/feed{rep}", available_now=True, impl="merge"
+                f"{base}/feed{rep}", available_now=True
             )
             s = time.monotonic() - t0
             best = s if best is None else min(best, s)

@@ -103,6 +103,6 @@ def drop_exact_duplicates(
 ) -> DataFrame:
     """Remove exact replay duplicates — same (shard, offset, seq) is the
     same binlog event re-received (no-double-emission invariant,
-    planetscale_edge_database_test.go:669-679).  In streaming this becomes
-    ``dropDuplicatesWithinWatermark`` (state bounded by the watermark)."""
+    planetscale_edge_database_test.go:669-679).  The CDC merge and delta
+    feed never call it: replays tie on (ts, seq) inside their LWW top-1."""
     return df.dropDuplicates(list(identity_cols))

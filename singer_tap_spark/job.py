@@ -1,13 +1,12 @@
 """spark-submit entrypoint — the sync/discover CLI (singer-tap main analogue).
 
-PATHS: the default ParquetLakeTable sink and the JSON lineage store commit
-via LOCAL-filesystem renames (os.rename/shutil) — changelog/checkpoint may
-be any Hadoop-FS URI, but --target/--lineage must be local (or NFS) paths.
-For object storage (s3://…) use the Iceberg sink (IcebergLakeTable, MERGE
-INTO; requires iceberg-spark-runtime + a catalog), whose commits are
-catalog-atomic — that is the intended cluster deployment.
+PATHS: the ParquetLakeTable sink (the only sink) and the JSON lineage store
+commit via LOCAL-filesystem renames (os.rename/shutil) — changelog/checkpoint
+may be any Hadoop-FS URI, but --target/--lineage must be local (or NFS)
+paths.  Object storage (s3://…) waits on an Iceberg runtime jar, whose
+catalog-atomic ``MERGE INTO`` commits would replace the renames.
 
-Usage (cluster, Iceberg path wired in code; CLI drives the parquet sink):
+Usage (cluster):
     spark-submit --py-files singer_tap_spark.zip -m singer_tap_spark.job \\
         sync --changelog hdfs://…/log --target /mnt/lake/table \\
              --lineage /mnt/lake/lineage.json --checkpoint /mnt/ckpt --streaming
@@ -19,7 +18,7 @@ The reference's mode flags (cmd/singer-tap/main.go:57-95): ``--discover`` ->
 the ``discover`` subcommand; sync default mode -> ``sync``; ``bench-replay``
 generates a deterministic synthetic change log and measures end-to-end
 events/sec (the BASELINE.json headline metric) at a chosen parallelism —
-used by bench/scaling.py for the N-vs-4N evidence.
+used by bench/scaling_multijvm.py for the N-vs-4N evidence.
 """
 
 from __future__ import annotations
@@ -99,13 +98,8 @@ def _sync(args) -> None:
         }))
         return
     if args.delta_feed:
-        fm = p.run_delta_feed(
-            args.delta_feed,
-            available_now=not args.continuous,
-            impl=args.delta_feed_impl,
-        )
+        fm = p.run_delta_feed(args.delta_feed, available_now=not args.continuous)
         print(json.dumps({"delta_feed": args.delta_feed,
-                          "impl": args.delta_feed_impl,
                           "metrics": json.loads(fm.to_json())}))
         return
     m = p.run_streaming(available_now=not args.continuous) if args.streaming else p.replay(
@@ -352,8 +346,8 @@ def main(argv: list[str] | None = None) -> None:
     )
     s.add_argument(
         "--delta-feed", default=None, metavar="PATH",
-        help="streaming head: write the stateful per-key UPSERT/DELETE "
-             "delta feed to PATH instead of materializing the table",
+        help="streaming head: write the per-key UPSERT/DELETE delta feed "
+             "to PATH instead of materializing the table",
     )
     s.add_argument(
         "--bootstrap-snapshot", default=None, metavar="PATH",
@@ -369,11 +363,6 @@ def main(argv: list[str] | None = None) -> None:
     s.add_argument(
         "--bootstrap-ts-col", default="ts",
         help="snapshot column holding the LWW timestamp",
-    )
-    s.add_argument(
-        "--delta-feed-impl", choices=["merge", "stateful"], default="merge",
-        help="delta-feed engine: 'merge' = JVM keyed-state table (scale "
-             "path); 'stateful' = applyInPandasWithState operator",
     )
     s.add_argument(
         "--specs", default=None,

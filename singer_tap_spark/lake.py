@@ -3,9 +3,9 @@
 The reference's sink is the Stitch Import API: per-PK ``upsert`` messages with
 a monotone ``sequence``, last-writer-wins at the destination
 (cmd/internal/http_record_writer.go:71-119, 184-191; types.go:491-523).
-Spark-natively that is ``MERGE INTO`` an Iceberg table.  The sandbox has no
-Iceberg runtime jar, so :class:`ParquetLakeTable` implements the SAME
-semantics as a bucket-partitioned copy-on-write merge:
+Spark-natively that is ``MERGE INTO`` an Iceberg table; with no Iceberg
+runtime jar in the repository, :class:`ParquetLakeTable` implements the SAME
+semantics as a bucket-partitioned merge and is the only sink:
 
 - target layout: parquet partitioned by ``_bucket = pmod(xxhash64(conv_id), B)``
   — the Spark analogue of Vitess hash-range shards AND of Iceberg's
@@ -20,10 +20,11 @@ semantics as a bucket-partitioned copy-on-write merge:
   at-least-once delivery, exactly the reference's flush-before-STATE +
   destination-LWW contract (sync.go:96-142).
 - DELETE: the winning event for a key having ``op='DELETE'`` removes the row
-  (MERGE ... WHEN MATCHED AND op='DELETE' THEN DELETE on the Iceberg path).
+  (Iceberg's MERGE ... WHEN MATCHED AND op='DELETE' THEN DELETE).
 
-:class:`IcebergLakeTable` carries the real ``MERGE INTO`` SQL for cluster
-runs (requires iceberg-spark-runtime on the classpath); swap via config.
+Commits are local-filesystem renames, so the table must live on a local
+(or NFS) path.  An object-storage sink waits on an Iceberg runtime: a real
+``MERGE INTO`` sink comes back with the jar, selected by config and tested.
 """
 
 from __future__ import annotations
@@ -31,7 +32,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from abc import ABC, abstractmethod
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -56,27 +56,9 @@ class MergeStats:
     schema_changes: list[str]
 
 
-class LakeTable(ABC):
-    """Destination-table interface (RecordWriter analogue, types.go:420-424)."""
+class ParquetLakeTable:
+    """Keyed destination table (RecordWriter analogue, types.go:420-424)."""
 
-    @abstractmethod
-    def exists(self) -> bool: ...
-
-    @abstractmethod
-    def read(self) -> DataFrame: ...
-
-    @abstractmethod
-    def merge(
-        self, batch: DataFrame, batch_id: int, affected: list[int] | None = None
-    ) -> MergeStats:
-        """Apply one micro-batch of change events (columns: key + payload +
-        ts + seq + op), idempotently, LWW by (ts, seq).  ``affected``: the
-        batch's bucket ids when the caller already knows them (lets the
-        caller fold bucket discovery into its own stats pass — one fewer
-        job/scan per batch)."""
-
-
-class ParquetLakeTable(LakeTable):
     def __init__(
         self,
         spark: SparkSession,
@@ -251,7 +233,11 @@ class ParquetLakeTable(LakeTable):
         batch_id: int = 0,
         affected: list[int] | None = None,
     ) -> MergeStats:
-        """Copy-on-write keyed merge of one (already decoded) change batch.
+        """Keyed merge of one (already decoded) change batch — columns: key
+        + payload + ts + seq + op — idempotently, LWW by (ts, seq).
+        ``affected``: the batch's bucket ids when the caller already knows
+        them (lets the caller fold bucket discovery into its own stats
+        pass — one fewer job/scan per batch).
 
         One declarative plan, one key-shuffle (Catalyst prunes partitions
         and columns):
@@ -606,84 +592,3 @@ class ParquetLakeTable(LakeTable):
             for _, _, files in os.walk(self._data)
         )
 
-
-class IcebergLakeTable(LakeTable):
-    """Real Iceberg ``MERGE INTO`` path for cluster runs.
-
-    Requires ``iceberg-spark-runtime`` on the classpath and an Iceberg
-    catalog configured (``spark.sql.catalog.<name>``).  Semantics match
-    :class:`ParquetLakeTable` one-for-one; the table should be created with
-    ``PARTITIONED BY (bucket(B, conv_id))`` so MERGE prunes to touched
-    buckets, and write.merge.mode=copy-on-write or merge-on-read as the
-    workload prefers.  Not exercisable in this sandbox (no jar — verified);
-    covered by the Parquet twin's tests.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        table: str,
-        key_cols: Sequence[str] = ("conv_id", "turn_idx"),
-    ) -> None:
-        self.spark = spark
-        self.table = table
-        self.key_cols = list(key_cols)
-
-    def exists(self) -> bool:
-        return self.spark.catalog.tableExists(self.table)
-
-    def read(self) -> DataFrame:
-        return self.spark.table(self.table).drop(SEQ_COL)
-
-    def merge(
-        self,
-        batch: DataFrame,
-        batch_id: int = 0,
-        affected: list[int] | None = None,  # Iceberg prunes via MERGE itself
-    ) -> MergeStats:
-        payload_cols = [
-            c
-            for c in batch.columns
-            if c not in (*self.key_cols, "ts", "seq", "op", "shard", "offset",
-                          "schema_version")
-        ]
-        src = lww_latest(
-            batch, self.key_cols, ("ts", "seq"),
-            value_cols=[*payload_cols, "ts", "seq", "op"],
-        )
-        # view name unique per (table, batch): concurrent stream merges from
-        # sync_all share one SparkSession, so a fixed name would be clobbered
-        # between createOrReplaceTempView and the MERGE (ADVICE r1)
-        view = "_cdc_batch_" + "".join(
-            ch if ch.isalnum() else "_" for ch in self.table
-        ) + f"_{batch_id}"
-        src.createOrReplaceTempView(view)
-        on = " AND ".join(f"t.{k} = s.{k}" for k in self.key_cols)
-        sets = ", ".join(
-            f"t.{c} = s.{c}" for c in (*payload_cols, "ts")
-        ) + f", t.{SEQ_COL} = s.seq"
-        cols = ", ".join([*self.key_cols, *payload_cols, "ts", SEQ_COL])
-        vals = ", ".join([f"s.{c}" for c in (*self.key_cols, *payload_cols, "ts")] + ["s.seq"])
-        # the (ts, seq) > (t.ts, t._seq) struct compare IS the sequence guard
-        guard = f"(named_struct('ts', s.ts, 'seq', s.seq) > named_struct('ts', t.ts, 'seq', t.{SEQ_COL}))"
-        try:
-            self.spark.sql(
-                f"""
-                MERGE INTO {self.table} t USING {view} s ON {on}
-                WHEN MATCHED AND s.op = 'DELETE' AND {guard} THEN DELETE
-                WHEN MATCHED AND s.op <> 'DELETE' AND {guard} THEN UPDATE SET {sets}
-                WHEN NOT MATCHED AND s.op <> 'DELETE' THEN INSERT ({cols}) VALUES ({vals})
-                """
-            )
-        finally:
-            self.spark.catalog.dropTempView(view)
-        snap = self.spark.sql(
-            f"SELECT snapshot_id FROM {self.table}.snapshots ORDER BY committed_at DESC LIMIT 1"
-        ).collect()
-        return MergeStats(
-            batch_rows=-1,
-            affected_buckets=-1,
-            rows_after=-1,
-            commit_id=str(snap[0][0]) if snap else "",
-            schema_changes=[],
-        )

@@ -140,7 +140,8 @@ def near_dup_clusters(
                 # stores the checkpoint blocks as a side effect, where
                 # eager=True spent a separate materialization job per
                 # round first (2 actions/round -> 1; the CC entries are
-                # fixed-overhead-bound at ~7 rounds each).
+                # fixed-overhead-bound: 3 rounds each, 2 real + 1
+                # fixpoint confirm).
                 new = new.localCheckpoint(eager=False)
             elif checkpoint == "reliable":
                 new = new.checkpoint(eager=True)

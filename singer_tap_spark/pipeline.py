@@ -19,7 +19,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from singer_tap_spark.lake import ParquetLakeTable
+from singer_tap_spark.lake import SEQ_COL, ParquetLakeTable
 from singer_tap_spark.lineage import Lineage
 from singer_tap_spark.metrics import BatchMetrics, RunMetrics
 
@@ -40,7 +40,6 @@ class PipelineConfig:
     stream_name: str = "transcripts"
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx")
     replication_method: str = INCREMENTAL
-    watermark_delay: str = "10 minutes"
     n_buckets: int = 16
     # payload projection (keys + engine columns always included — O11)
     selected_columns: list[str] | None = None
@@ -58,8 +57,7 @@ class PipelineConfig:
     # fraction truncated, NULL pass-through; value_converter.go:11-57).
     # Do NOT spec engine columns (shard/offset/seq/op).  A date-time spec on
     # `ts` turns it into an RFC3339 STRING: LWW order is preserved
-    # (zero-padded ISO sorts chronologically; unparseable "" loses), but the
-    # STREAMING watermark needs a typed ts — use batch replay in that case.
+    # (zero-padded ISO sorts chronologically; unparseable "" loses).
     property_specs: dict | None = None  # {name: decode.PropertySpec}
     tinyint_as_boolean: bool = True  # --tinyint-as-boolean (main.go:43)
     # streaming pacing: files per micro-batch (the reference's batch-size
@@ -197,21 +195,6 @@ class CDCPipeline:
             folded = folded.add("shard", "string")
         return folded, mins
 
-    def _log_schema(self):
-        return self._log_metadata()[0]
-
-    def _read_jsonl(self) -> DataFrame:
-        """Singer-wire-format change log: JSON lines decoded JVM-side (O20).
-
-        Accepts BOTH shapes on the same stream, mirroring parseInput
-        (http-tap/main.go:98-126): full Singer envelopes
-        ``{"type":"RECORD","stream":…,"record":{…}}`` (SCHEMA/STATE lines
-        skipped — schema is explicit config here, state is ours) and bare
-        change-event objects.  Schema evolution = pass a wider
-        ``jsonl_schema``; missing fields null-fill."""
-        raw = self.spark.read.text(self.cfg.changelog_path)
-        return self._decode_jsonl(raw)
-
     def _wire_schema_pair(self):
         """(record schema, Singer envelope schema) for the jsonl wire."""
         from pyspark.sql import types as T
@@ -239,9 +222,6 @@ class CDCPipeline:
         )
         return schema, envelope
 
-    def _decode_jsonl(self, raw: DataFrame) -> DataFrame:
-        return self._decode_jsonl_split(raw)[0]
-
     def _decode_jsonl_split(self, raw: DataFrame) -> tuple[DataFrame, DataFrame]:
         """JSON-lines decode returning ``(rows, rejects)``.
 
@@ -263,7 +243,9 @@ class CDCPipeline:
         * ``missing_required_field`` — parseable, but no ``seq`` after
           decoding (unroutable: the engine cannot order it).
         Both outputs are projections of ONE parse — Catalyst prunes each
-        side's unused columns, no second from_json evaluation is planned."""
+        side's unused columns, no second from_json evaluation is planned.
+        Schema evolution = a wider ``jsonl_schema``; missing fields
+        null-fill."""
         from pyspark.sql import types as T
 
         schema, envelope = self._wire_schema_pair()
@@ -442,13 +424,24 @@ class CDCPipeline:
             ).count_rows()
         return bm
 
-    def _read_changelog(self) -> DataFrame:
+    def _read_changelog(self) -> tuple[DataFrame, dict | None]:
+        """Bounded read of the whole change log, projected (O11):
+        ``(events, {shard: min retained offset})``.
+
+        Parquet: schema and retained minima from one footer pass
+        (:meth:`_log_metadata`).  JSON lines (O20): decoded JVM-side, with
+        the rejects quarantined or failed per ``cfg.rejects_path`` /
+        ``decode_errors`` before any row is returned; there are no footers,
+        so the minima are None and :meth:`replay` computes them only when a
+        saved lineage needs the staleness check."""
         if self.cfg.changelog_format == "jsonl":
-            return self._project(self._read_jsonl())
-        df = self.spark.read.schema(self._log_schema()).parquet(
-            self.cfg.changelog_path
-        )
-        return self._project(df)
+            raw = self.spark.read.text(self.cfg.changelog_path)
+            rows, rejects = self._decode_jsonl_split(raw)
+            self._handle_rejects(rejects, None)
+            return self._project(rows), None
+        schema, retained_mins = self._log_metadata()
+        df = self.spark.read.schema(schema).parquet(self.cfg.changelog_path)
+        return self._project(df), retained_mins
 
     def _project(self, df: DataFrame) -> DataFrame:
         """Column projection (O11): selected payload columns only; keys and
@@ -539,48 +532,35 @@ class CDCPipeline:
         # on (ts, seq) with byte-identical payloads, so the merge's LWW
         # top-1 collapses them for free — an extra dropDuplicates would be
         # a full-data shuffle spent removing rows the aggregate already
-        # ignores.  (Streaming additionally runs dropDuplicatesWithinWatermark
-        # upstream to keep *state-bounded* cross-batch dedup.)
+        # ignores.
         #
         # ONE small agg computes the cursor advance (per-shard high-water
         # mark + received count, OnCursor analogue) AND the touched-bucket
         # set — folding what used to be a second distinct() job/scan into
         # the same pass (Catalyst prunes the scan to three columns).
-        aggs = [F.max("offset").alias("mx"), F.count("*").alias("n")]
-        bucketed_sink = isinstance(self.lake, ParquetLakeTable)
-        if bucketed_sink:
-            # probe form, not the raw bucket expr: merge() buckets the
-            # POST-align (stored-schema-typed) key, and xxhash64 is
-            # type-sensitive — a wire SCHEMA narrowing the pk (int batch
-            # vs bigint store) would otherwise compute a wrong affected
-            # set and prune the stored rows out of the LWW merge.
-            # r7: grouped on (shard, bucket) — still ONE pass over the
-            # batch, but a plain partial hash agg into a <= shards x
-            # n_buckets grid instead of a per-shard collect_set OBJECT
-            # aggregate (measured 0.88 s -> 0.59 s on the 20M-event
-            # batch); per-shard cursors fold driver-side from the
-            # metadata-sized grid.
-            grid = batch.groupBy(
-                "shard",
-                self.lake.probe_bucket_expr(
-                    F.col(self.lake.bucket_key)
-                ).alias("_bk"),
-            ).agg(*aggs).collect()
-            per_shard: dict = {}
-            for r in grid:
-                mx, n, bks = per_shard.get(r["shard"], (None, 0, set()))
-                if r["mx"] is not None:
-                    mx = r["mx"] if mx is None else max(mx, r["mx"])
-                if r["_bk"] is not None:
-                    bks.add(r["_bk"])
-                per_shard[r["shard"]] = (mx, n + r["n"], bks)
-            stats = [
-                {"shard": s, "mx": mx, "n": n, "bks": bks}
-                for s, (mx, n, bks) in per_shard.items()
-            ]
-        else:
-            stats = batch.groupBy("shard").agg(*aggs).collect()
-        n_events = sum(r["n"] for r in stats)
+        # Probe form, not the raw bucket expr: merge() buckets the
+        # POST-align (stored-schema-typed) key, and xxhash64 is
+        # type-sensitive — a wire SCHEMA narrowing the pk (int batch vs
+        # bigint store) would otherwise compute a wrong affected set and
+        # prune the stored rows out of the LWW merge.
+        # r7: grouped on (shard, bucket) — still ONE pass over the batch,
+        # but a plain partial hash agg into a <= shards x n_buckets grid
+        # instead of a per-shard collect_set OBJECT aggregate (measured
+        # 0.88 s -> 0.59 s on the 20M-event batch); per-shard cursors fold
+        # driver-side from the metadata-sized grid.
+        grid = batch.groupBy(
+            "shard",
+            self.lake.probe_bucket_expr(F.col(self.lake.bucket_key)).alias("_bk"),
+        ).agg(F.max("offset").alias("mx"), F.count("*").alias("n")).collect()
+        per_shard: dict = {}
+        for r in grid:
+            mx, n, bks = per_shard.get(r["shard"], (None, 0, set()))
+            if r["mx"] is not None:
+                mx = r["mx"] if mx is None else max(mx, r["mx"])
+            if r["_bk"] is not None:
+                bks.add(r["_bk"])
+            per_shard[r["shard"]] = (mx, n + r["n"], bks)
+        n_events = sum(n for _, n, _ in per_shard.values())
         if n_events == 0:
             # consume the pending reject count even on an all-rejected (or
             # resume-empty) batch: the count must neither vanish nor leak
@@ -592,26 +572,20 @@ class CDCPipeline:
             if nr >= 0:
                 self.metrics.add(bm)  # quarantine activity is observable
             return bm
-        affected = (
-            sorted({b for r in stats for b in r["bks"]}) if bucketed_sink else None
-        )
+        affected = sorted({b for _, _, bks in per_shard.values() for b in bks})
         ms = self.lake.merge(batch.drop("schema_version"), batch_id, affected)
         lineage = Lineage.load(self.cfg.lineage_path) or Lineage.empty(
             self.cfg.stream_name, []
         )
         lineage.advance(
             self.cfg.stream_name,
-            {r["shard"]: r["mx"] for r in stats},
+            {s: mx for s, (mx, _, _) in per_shard.items()},
             batch_id,
             ms.commit_id,
         )
         lineage.save(self.cfg.lineage_path)
         every = self.cfg.sink_compact_every
-        if (
-            every
-            and getattr(self.lake, "mode", None) == "mor"
-            and (batch_id + 1) % every == 0
-        ):
+        if every and self.lake.mode == "mor" and (batch_id + 1) % every == 0:
             # retain_tombstones: a later micro-batch can carry a
             # legitimately-late event for a deleted key — dropping the
             # tombstone mid-stream would resurrect it (terminal compaction
@@ -639,17 +613,7 @@ class CDCPipeline:
         optionally in ``n_batches`` seq-ranged sessions so resume/crash tests
         have boundaries to interrupt at.  FULL_TABLE mode ignores saved
         lineage and rebuilds from offset zero (sync.go:81-83)."""
-        if self.cfg.changelog_format == "jsonl":
-            raw = self.spark.read.text(self.cfg.changelog_path)
-            rows, rejects = self._decode_jsonl_split(raw)
-            self._handle_rejects(rejects, None)
-            df = self._project(rows)
-            retained_mins = None  # no footers: computed below only if needed
-        else:
-            schema, retained_mins = self._log_metadata()
-            df = self._project(
-                self.spark.read.schema(schema).parquet(self.cfg.changelog_path)
-            )
+        df, retained_mins = self._read_changelog()
         lineage = Lineage.load(self.cfg.lineage_path)
         if self.cfg.replication_method == INCREMENTAL and lineage is not None:
             if retained_mins is None:  # jsonl fallback: one pruned agg job
@@ -702,47 +666,38 @@ class CDCPipeline:
         full-data state shuffle per microbatch (measured 2.5x end-to-end
         on the 2M-event bench log, final tables identical).  The delta
         feed's rows are emitted EVENTS, so IT must not double-emit on
-        replay — the default ``impl='merge'`` gets that from its state
-        join + idempotent ``batch=N`` overwrite + ``_last_batch`` marker
-        (no watermark state needed); only ``impl='stateful'`` keeps the
-        watermarked dedup upstream (see :meth:`run_delta_feed`)."""
-        if not self.cfg.checkpoint_dir:
-            raise ValueError("checkpoint_dir required for streaming")
-        # quarantine/fail needs the RAW payload lines in the sink (the
-        # rejects are gone once the source pre-decodes), so decode moves
-        # inside foreachBatch for payload-style sources; typed sources have
-        # no decode step and flow unchanged
-        defer_decode = (
-            self.cfg.rejects_path is not None or self.cfg.decode_errors == "fail"
-        )
-        src = self._stream_source(dedup=False, decode=not defer_decode)
+        replay — it gets that from its state join + idempotent ``batch=N``
+        overwrite + ``_last_batch`` marker (see :meth:`run_delta_feed`)."""
 
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            if "value" in batch_df.columns and "seq" not in batch_df.columns:
-                rows, rejects = self._decode_jsonl_split(batch_df)
-                self._handle_rejects(rejects, batch_id)  # before the merge
-                self.apply_batch(rows, batch_id)
-            else:
-                self.apply_batch(batch_df, batch_id)
+            self.apply_batch(self._decode_microbatch(batch_df, batch_id), batch_id)
 
-        writer = src.writeStream.foreachBatch(_sink).option(
+        return self._run_stream(_sink, available_now)
+
+    def _run_stream(self, sink, available_now: bool) -> RunMetrics:
+        """Drive :meth:`_stream_source` into a ``foreachBatch`` sink; the
+        checkpoint WAL is the cursor store."""
+        if not self.cfg.checkpoint_dir:
+            raise ValueError("checkpoint_dir required for streaming")
+        writer = self._stream_source().writeStream.foreachBatch(sink).option(
             "checkpointLocation", self.cfg.checkpoint_dir
         )
         if available_now:
             writer = writer.trigger(availableNow=True)
-        q = writer.start()
-        q.awaitTermination()
+        writer.start().awaitTermination()
         return self.metrics
 
-    def _stream_source(self, dedup: bool = True, decode: bool = True) -> DataFrame:
-        """Streaming read of the change log; with ``dedup``, watermarked +
-        replay-deduplicated (``dropDuplicatesWithinWatermark`` — state
-        bounded by the watermark; needed only by sinks that EMIT rows, like
-        the delta feed; the merge sink's LWW guard absorbs replays for
-        free).  Schema fixed per session — a mid-stream DDL needs a session
-        restart, exactly the reference's re-discover-then-re-emit-SCHEMA
-        model (sync.go:63-66); the next session's _log_schema() picks it
-        up.
+    def _stream_source(self) -> DataFrame:
+        """Streaming read of the change log.  Schema fixed per session — a
+        mid-stream DDL needs a session restart, exactly the reference's
+        re-discover-then-re-emit-SCHEMA model (sync.go:63-66); the next
+        session's footer pass picks it up.
+
+        Payload-style sources (jsonl, text, kafka) hand the RAW ``value``
+        lines on; :meth:`_decode_microbatch` decodes them inside the sink,
+        where the rejects are still at hand for the quarantine.  No replay
+        dedup here: the merge sink's LWW guard absorbs replays, and the
+        delta feed's state join + per-batch overwrite keep it exactly-once.
 
         With ``cfg.source_format`` set, the source is generic:
         ``readStream.format(...).options(...)`` — the reference's
@@ -752,11 +707,6 @@ class CDCPipeline:
         path; non-file sources load path-less and must emit either a
         ``value`` payload (JSON-lines-decoded) or the typed change-event
         columns."""
-        if dedup and not decode:
-            raise ValueError(
-                "dedup needs decoded rows (the watermark is on ts); "
-                "decode=False is only for the quarantine sink"
-            )
         mft = str(self.cfg.max_files_per_trigger)
         if self.cfg.source_format is not None:
             fmt = self.cfg.source_format
@@ -775,7 +725,7 @@ class CDCPipeline:
                 reader = reader.option("maxFilesPerTrigger", mft)
                 if fmt in ("parquet", "orc"):
                     # schema from the log's own footers (one driver pass)
-                    reader = reader.schema(self._log_schema())
+                    reader = reader.schema(self._log_metadata()[0])
                 elif fmt != "text":
                     if self.cfg.jsonl_schema is None:
                         raise ValueError(
@@ -792,111 +742,55 @@ class CDCPipeline:
                 else reader.load()
             )
             if "value" in raw.columns and "seq" not in raw.columns:
-                # payload-style source (kafka/text): JSON-lines decode —
-                # deferred to the sink when decode=False (quarantine path)
-                payload = raw.select(F.col("value").cast("string").alias("value"))
-                src = self._decode_jsonl(payload) if decode else payload
-            else:
-                src = raw
-        elif self.cfg.changelog_format == "jsonl":
-            raw = (
+                # payload-style source (kafka/text): binary payloads as text
+                return raw.select(F.col("value").cast("string").alias("value"))
+            return raw
+        if self.cfg.changelog_format == "jsonl":
+            return (
                 self.spark.readStream.format("text")
                 .option("maxFilesPerTrigger", mft)
                 .load(self.cfg.changelog_path)
             )
-            src = self._decode_jsonl(raw) if decode else raw
-        else:
-            src = (
-                self.spark.readStream.schema(self._log_schema())
-                .option("maxFilesPerTrigger", mft)  # pacing (batch-size analogue)
-                .parquet(self.cfg.changelog_path)
-            )
-        if not dedup:
-            return src
-        src = src.withWatermark("ts", self.cfg.watermark_delay)
-        return src.dropDuplicatesWithinWatermark(["shard", "offset", "seq"])
+        return (
+            self.spark.readStream.schema(self._log_metadata()[0])
+            .option("maxFilesPerTrigger", mft)  # pacing (batch-size analogue)
+            .parquet(self.cfg.changelog_path)
+        )
 
-    def run_delta_feed(
-        self, feed_path: str, available_now: bool = True, impl: str = "merge"
-    ) -> RunMetrics:
+    def _decode_microbatch(self, batch_df: DataFrame, batch_id: int) -> DataFrame:
+        """The streaming decode site: a payload microbatch (raw ``value``
+        lines) is JSON-lines-decoded and its rejects land in their
+        ``batch=N`` quarantine partition BEFORE the caller's merge; typed
+        microbatches pass through unchanged."""
+        if "value" not in batch_df.columns or "seq" in batch_df.columns:
+            return batch_df
+        rows, rejects = self._decode_jsonl_split(batch_df)
+        self._handle_rejects(rejects, batch_id)
+        return rows
+
+    def run_delta_feed(self, feed_path: str, available_now: bool = True) -> RunMetrics:
         """Alternative streaming head: instead of materializing the table,
         emit the per-key deduplicated UPSERT/DELETE *delta feed* — exactly
         the rows a downstream MERGE/cache-invalidation/Kafka consumer needs.
-        CLI: ``sync --streaming --delta-feed PATH [--delta-feed-impl ...]``.
+        CLI: ``sync --streaming --delta-feed PATH``.
 
-        Two implementations, identical feed semantics (one row per key per
-        microbatch IFF the batch strictly advanced that key's (ts, seq)
-        winner; DELETE winners emitted and remembered — pytest-enforced
-        equivalence):
+        Emission rule: one row per key per microbatch IFF the batch's
+        (ts, seq) winner strictly beats every earlier batch's winner for
+        that key; DELETE winners are emitted and remembered (pinned by
+        the DuckDB oracle test_delta_feed_emission_oracle).  Cross-batch state is a bucketed
+        keyed table at ``<feed_path>_state`` — per batch, one LWW
+        aggregation + one key-join against the state decide the emitted
+        rows, then the state merges the changes (tombstones kept by folding
+        ``op`` into a payload column).  All JVM: no per-key Python and no
+        event-time watermark, so late rows are judged against the state,
+        never dropped.  Each batch's feed rows land in
+        ``<feed_path>/batch=N`` via idempotent overwrite, so a crash replay
+        rewrites the same partition instead of duplicating it.
 
-        - ``impl='merge'`` (default, the scale path): cross-batch state is
-          a bucketed keyed table at ``<feed_path>_state`` — per batch, one
-          LWW aggregation + one key-join against the state decide the
-          emitted rows, then the state merges the changes (tombstones kept
-          by folding ``op`` into a payload column).  All JVM; ~100x the
-          stateful form at 10^6 keys/batch.  Each batch's feed rows land in
-          ``<feed_path>/batch=N`` via idempotent overwrite, so a crash
-          replay rewrites the same partition instead of duplicating it.
-        - ``impl='stateful'``: the applyInPandasWithState operator
-          (streaming_state.py) with one state-store row per key.  Arrow-
-          batched, but the function runs once PER KEY-GROUP — Python call
-          overhead dominates at high key cardinality (measured ~7k ev/s at
-          1.4M keys vs ~500k for 'merge'); fine at moderate cardinality and
-          kept as the custom-stateful-operator surface.
-
-        Returns :class:`RunMetrics`; on the 'merge' path each batch records
-        its EMITTED feed-row count (footer metadata read, no extra job) —
-        the reference's per-batch record-count logging
-        (http_record_writer.go:121-133).  The 'stateful' path's file sink
-        offers no per-batch hook, so its metrics stay empty.
-        """
-        if not self.cfg.checkpoint_dir:
-            raise ValueError("checkpoint_dir required for streaming")
-        if impl == "merge":
-            return self._run_delta_feed_merge(feed_path, available_now)
-        if impl != "stateful":
-            raise ValueError(f"unknown delta-feed impl: {impl!r}")
-        if self.cfg.rejects_path is not None or self.cfg.decode_errors == "fail":
-            # the stateful operator needs the source decoded BEFORE its
-            # watermark, so the quarantine's deferred-decode trick cannot
-            # apply — refuse loudly rather than silently dropping bad lines
-            # the user explicitly asked to quarantine/abort on
-            raise ValueError(
-                "rejects_path/decode_errors='fail' are not supported with "
-                "impl='stateful' (decode cannot defer past the watermark); "
-                "use the default impl='merge'"
-            )
-        from singer_tap_spark.streaming_state import stateful_lww_updates
-
-        src = self._stream_source()
-        payload_cols = [
-            c
-            for c in src.columns
-            if c not in self.cfg.key_cols
-            and c not in ("shard", "offset", "seq", "op", "ts", "schema_version")
-        ]
-        feed = stateful_lww_updates(
-            src,
-            key_cols=self.cfg.key_cols,
-            payload_cols=payload_cols,
-            watermark_delay=self.cfg.watermark_delay,
-            output_mode="append",  # file sink: rows are immutable feed EVENTS
-            set_watermark=False,  # _stream_source already watermarked it
-        )
-        writer = (
-            feed.writeStream.format("parquet")
-            .option("path", feed_path)
-            .option("checkpointLocation", self.cfg.checkpoint_dir)
-            .outputMode("append")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-        q.awaitTermination()
-        return self.metrics
-
-    def _run_delta_feed_merge(self, feed_path: str, available_now: bool) -> RunMetrics:
-        """The JVM delta feed (see :meth:`run_delta_feed` impl='merge').
+        Returns :class:`RunMetrics`; each batch records its EMITTED
+        feed-row count (footer metadata read, no extra job) — the
+        reference's per-batch record-count logging
+        (http_record_writer.go:121-133).
 
         Crash-recovery contract (every window covered — ADVICE r3 high):
         the sink commits three artifacts in a fixed order per batch —
@@ -927,7 +821,6 @@ class CDCPipeline:
         import os as _os
 
         from singer_tap_spark.dedup import lww_latest
-        from singer_tap_spark.lake import SEQ_COL, ParquetLakeTable
 
         state_path = f"{feed_path}_state"
         # mor: each microbatch is ONE bucket-partitioned delta append —
@@ -962,12 +855,9 @@ class CDCPipeline:
             if batch_id <= _last_applied():
                 return  # crash after marker, before checkpoint: all done
             t0 = time.monotonic()
-            if "value" in batch_df.columns and "seq" not in batch_df.columns:
-                # deferred decode (quarantine path): rejects first, then
-                # the typed rows flow into the normal feed pipeline
-                batch_df, rejects = self._decode_jsonl_split(batch_df)
-                self._handle_rejects(rejects, batch_id)
-            batch = self._normalize(self._project(batch_df))
+            batch = self._normalize(
+                self._project(self._decode_microbatch(batch_df, batch_id))
+            )
             payload = [
                 c
                 for c in batch.columns
@@ -1044,8 +934,6 @@ class CDCPipeline:
             emitted = pds.dataset(
                 feed_dir, format="parquet", ignore_prefixes=[".", "_"]
             ).count_rows()
-            from singer_tap_spark.metrics import BatchMetrics
-
             self.metrics.add(
                 BatchMetrics(
                     batch_id=batch_id,
@@ -1065,17 +953,4 @@ class CDCPipeline:
             if every and (batch_id + 1) % every == 0:
                 state.compact()
 
-        # quarantine/fail parity with run_streaming: payload-style sources
-        # defer decode into the sink so rejects are observable
-        defer_decode = (
-            self.cfg.rejects_path is not None or self.cfg.decode_errors == "fail"
-        )
-        src = self._stream_source(dedup=False, decode=not defer_decode)
-        writer = src.writeStream.foreachBatch(_sink).option(
-            "checkpointLocation", self.cfg.checkpoint_dir
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-        q.awaitTermination()
-        return self.metrics
+        return self._run_stream(_sink, available_now)

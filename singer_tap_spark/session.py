@@ -58,15 +58,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # MERGE rewrites only the touched bucket partitions of the target
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # Parquet codec for everything the engine writes (lake buckets,
-        # mor deltas, feed partitions, index tables).  Parameterised: the
-        # CDC sink rewrites touched buckets every merge, so write CPU sits
-        # on the hot path — archival-leaning clusters can dial zstd back
-        # in via the env var without a code change.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

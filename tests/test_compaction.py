@@ -62,7 +62,7 @@ def test_stray_staging_dir_cleaned(spark, tmp_path):
     with open(f"{stray}/_bucket=3/garbage.parquet", "w") as f:
         f.write("not parquet")
     # next merge cleans the stray dir and applies normally
-    batch = p._read_changelog().limit(10)
+    batch = p._read_changelog()[0].limit(10)
     p.lake.merge(batch, batch_id=7)
     assert not os.path.exists(stray)
     got = p.lake.read().select("conv_id", "turn_idx", "text").toPandas()

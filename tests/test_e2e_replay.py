@@ -82,7 +82,7 @@ def test_whole_batch_replay_is_noop(spark, tmp_path):
     guard makes the second application a no-op (§2.3 #2/#3)."""
     cfg, glob = _setup(spark, tmp_path, n=6000, delete_frac=0.1)
     p = CDCPipeline(spark, cfg)
-    batch = p._read_changelog()
+    batch = p._read_changelog()[0]
     p.apply_batch(batch, 0)
     before = p.lake.read().toPandas()
     p.apply_batch(batch, 0)  # replay the whole batch

@@ -65,7 +65,7 @@ def test_mor_replay_idempotent(spark, tmp_path):
     base = str(tmp_path)
     write_changelog(generate_changelog(spark, 4000, delete_frac=0.1), f"{base}/log")
     p = CDCPipeline(spark, _cfg(base))
-    batch = p._read_changelog()
+    batch = p._read_changelog()[0]
     p.apply_batch(batch, 0)
     before = p.lake.read().select(*COLS).toPandas()
     p.apply_batch(batch, 0)  # replay
@@ -114,7 +114,7 @@ def test_cow_open_on_pending_deltas_raises(spark, tmp_path):
     with pytest.raises(RuntimeError, match="pending merge-on-read deltas"):
         cow.read()
     with pytest.raises(RuntimeError, match="pending merge-on-read deltas"):
-        cow.merge(p._read_changelog().limit(10), batch_id=1)
+        cow.merge(p._read_changelog()[0].limit(10), batch_id=1)
 
     # compact from a mor instance resolves; cow open then works
     p.lake.compact()

@@ -63,7 +63,7 @@ def test_resume_filter_pushes_to_scan(spark, tmp_path):
         {"shard-0": 500, "shard-1": 800, "shard-2": 100, "shard-3": 50},
         0, "x",
     )
-    df = p._resume_filter(p._read_changelog(), lin)
+    df = p._resume_filter(p._read_changelog()[0], lin)
     plan = _plan(df)
     # the coarse bound offset > min(cursors) must reach the parquet scan
     # (row-group skipping on resume-near-head)
@@ -73,9 +73,9 @@ def test_resume_filter_pushes_to_scan(spark, tmp_path):
     # (its rows all qualify) — but resume must still include that shard fully
     lin2 = Lineage.empty("transcripts", [])
     lin2.advance("transcripts", {"shard-0": 500}, 0, "x")
-    df2 = p._resume_filter(p._read_changelog(), lin2)
+    df2 = p._resume_filter(p._read_changelog()[0], lin2)
     assert df2.where("shard = 'shard-1'").count() == \
-        p._read_changelog().where("shard = 'shard-1'").count()
+        p._read_changelog()[0].where("shard = 'shard-1'").count()
 
 
 def test_stats_agg_prunes_to_two_columns(spark, tmp_path):
@@ -169,7 +169,7 @@ def test_merge_prunes_target_buckets(spark, tmp_path):
     p = CDCPipeline(spark, cfg)
     p.replay()
     # one-key batch -> exactly 1 affected bucket
-    one = p._read_changelog().limit(1)
+    one = p._read_changelog()[0].limit(1)
     stats = p.lake.merge(one, batch_id=99)
     assert stats.affected_buckets == 1
 

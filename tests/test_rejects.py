@@ -183,13 +183,13 @@ def test_quarantine_off_keeps_r3_skip_semantics(spark, tmp_path):
 
 
 def test_delta_feed_quarantine(spark, tmp_path):
-    """DLQ parity on the delta-feed head (impl='merge'): bad lines
+    """DLQ parity on the delta-feed head: bad lines
     quarantined per batch, good rows emitted as feed events."""
     base = str(tmp_path)
     _write_log(base)
     cfg = _cfg(base, rejects_path=f"{base}/rejects")
     p = CDCPipeline(spark, cfg)
-    p.run_delta_feed(f"{base}/feed", available_now=True, impl="merge")
+    p.run_delta_feed(f"{base}/feed", available_now=True)
     assert _reasons(spark, f"{base}/rejects") == EXPECT_REASONS
     feed = spark.read.parquet(f"{base}/feed")
     assert feed.select("conv_id", "turn_idx").distinct().count() == 4
@@ -249,19 +249,6 @@ def test_reject_counts_in_metrics(spark, tmp_path):
     cfg_u.checkpoint_dir = f"{base}/ck_u"
     m3 = CDCPipeline(spark, cfg_u).run_streaming(available_now=True)
     assert all(b.n_rejects == -1 for b in m3.batches)
-
-
-def test_stateful_delta_feed_refuses_quarantine_config(spark, tmp_path):
-    """impl='stateful' cannot defer decode past its watermark, so a DLQ
-    config must refuse loudly instead of silently dropping bad lines."""
-    base = str(tmp_path)
-    _write_log(base)
-    p = CDCPipeline(spark, _cfg(base, rejects_path=f"{base}/rejects"))
-    with pytest.raises(ValueError, match="stateful"):
-        p.run_delta_feed(f"{base}/feed", impl="stateful")
-    p2 = CDCPipeline(spark, _cfg(base, decode_errors="fail"))
-    with pytest.raises(ValueError, match="stateful"):
-        p2.run_delta_feed(f"{base}/feed2", impl="stateful")
 
 
 def test_all_rejects_batch_metrics_not_lost(spark, tmp_path):

@@ -1,5 +1,6 @@
 """Structured Streaming path: AvailableNow bounded sessions (O7), checkpoint
-resume, watermarked exact-dup drop — matches the batch path's final state."""
+resume, exact replays absorbed by the merge's LWW guard (no watermark) —
+matches the batch path's final state."""
 
 from pyspark.sql import functions as F
 

@@ -1,88 +1,20 @@
-"""Stateful streaming LWW delta feed (applyInPandasWithState): emits a key
-only when a batch advances its winner; final per-key emission equals the
-batch LWW oracle."""
+"""The UPSERT/DELETE delta feed (``CDCPipeline.run_delta_feed``): its
+emission rule against a DuckDB oracle, resolution to the merge sink's
+final state, crash-replay windows and cadenced state compaction."""
 
+import glob
+import json
+
+import duckdb
 from pyspark.sql import functions as F
 
 from singer_tap_spark.changelog import generate_changelog, write_changelog
 from singer_tap_spark.dedup import lww_latest
-from singer_tap_spark.streaming_state import stateful_lww_updates
-
-
-def _run_stream(spark, log_path, ckpt, out_name):
-    schema = spark.read.parquet(log_path).schema
-    src = spark.readStream.schema(schema).parquet(log_path)
-    delta = stateful_lww_updates(src)
-    collected = []
-
-    def sink(bdf, _bid):
-        collected.append(bdf.toPandas())
-
-    q = (
-        delta.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import pandas as pd
-
-    frames = [f for f in collected if len(f)]
-    if not frames:
-        return spark.createDataFrame([], delta.schema)
-    return spark.createDataFrame(pd.concat(frames), schema=delta.schema)
-
-
-def test_delta_feed_matches_batch_lww(spark, tmp_path):
-    base = str(tmp_path)
-    df = generate_changelog(spark, 4000, update_frac=0.5, delete_frac=0.1, ooo_frac=0.2)
-    write_changelog(df, f"{base}/log")
-    out = _run_stream(spark, f"{base}/log", f"{base}/ck", "delta1")
-
-    # last emission per key == batch LWW winner (op included: DELETE flows)
-    final = lww_latest(
-        out, ("conv_id", "turn_idx"), ("ts", "seq"),
-        value_cols=["op", "role", "text", "tool", "ts", "seq"],
-    )
-    want = lww_latest(df, ("conv_id", "turn_idx"), ("ts", "seq"),
-                      value_cols=["op", "role", "text", "tool", "ts", "seq"])
-    assert final.exceptAll(want).count() == 0
-    assert want.exceptAll(final).count() == 0
-
-
-def test_delta_feed_suppresses_stale_batches(spark, tmp_path):
-    """Second session carrying only older events for known keys must emit
-    nothing new for them (state won)."""
-    base = str(tmp_path)
-    df = generate_changelog(spark, 3000, update_frac=0.5, ooo_frac=0.0)
-    newer = df.where("seq >= 1500")
-    older = df.where("seq < 1500")
-    write_changelog(newer, f"{base}/log")
-    out1 = _run_stream(spark, f"{base}/log", f"{base}/ck", "delta2")
-    n1 = out1.count()
-
-    # append strictly-older events; stream resumes from checkpoint
-    older.repartition(2).write.mode("append").partitionBy("shard").parquet(f"{base}/log")
-    out2 = _run_stream(spark, f"{base}/log", f"{base}/ck", "delta2b")
-    emitted_keys_2 = out2.select("conv_id", "turn_idx", "ts", "seq")
-    # any key emitted in session 2 must NOT already have a >= (ts,seq) winner
-    # from session 1
-    stale = (
-        emitted_keys_2.alias("n")
-        .join(out1.alias("o"), ["conv_id", "turn_idx"])
-        .where(
-            F.struct(F.col("o.ts"), F.col("o.seq"))
-            >= F.struct(F.col("n.ts"), F.col("n.seq"))
-        )
-    )
-    assert stale.count() == 0
-    assert n1 > 0
 
 
 def test_pipeline_delta_feed_head(spark, tmp_path):
-    """The pipeline wiring for the stateful feed (VERDICT r1 #10): the
-    parquet change feed written by run_delta_feed resolves (LWW + DELETE
+    """The pipeline wiring for the feed (VERDICT r1 #10): the parquet
+    change feed written by run_delta_feed resolves (LWW + DELETE
     filter) to the same final state as the merge sink over the same log."""
     from singer_tap_spark import CDCPipeline, PipelineConfig
 
@@ -155,7 +87,7 @@ def test_delta_feed_crash_replay_preserves_feed(spark, tmp_path):
         max_files_per_trigger=4,  # several microbatches
     )
     p = CDCPipeline(spark, cfg)
-    p.run_delta_feed(f"{base}/feed", available_now=True, impl="merge")
+    p.run_delta_feed(f"{base}/feed", available_now=True)
 
     want = _resolve_feed(spark, f"{base}/feed").toPandas()
     assert len(want) > 0
@@ -174,7 +106,7 @@ def test_delta_feed_crash_replay_preserves_feed(spark, tmp_path):
         if os.path.exists(crc):
             os.remove(crc)
         CDCPipeline(spark, cfg).run_delta_feed(
-            f"{base}/feed", available_now=True, impl="merge"
+            f"{base}/feed", available_now=True
         )
 
     # window 1: marker present -> whole sink skipped, feed intact
@@ -218,7 +150,7 @@ def test_delta_feed_state_compaction_bounded(spark, tmp_path):
             delta_feed_compact_every=compact_every,
         )
         CDCPipeline(spark, cfg).run_delta_feed(
-            f"{base}/feed_{tag}", available_now=True, impl="merge"
+            f"{base}/feed_{tag}", available_now=True
         )
 
     run("c", compact_every=2)
@@ -247,42 +179,94 @@ def test_delta_feed_state_compaction_bounded(spark, tmp_path):
     assert_frames_equal(got, want, ["conv_id", "turn_idx"])
 
 
-def test_delta_feed_impls_equivalent(spark, tmp_path):
-    """The JVM 'merge' delta feed and the applyInPandasWithState 'stateful'
-    feed must emit the SAME event set on the same log with the same
-    microbatching — one row per key per batch iff the batch strictly
-    advanced the key's (ts, seq), DELETE winners included."""
-    from pyspark.sql import functions as F
+def _microbatch_files(ckpt):
+    """{input file path: batchId} from the file source's metadata log —
+    ``<ckpt>/sources/0/<N>`` (and any ``<N>.compact``) hold a ``v1`` header
+    then one JSON entry per input file."""
+    files = {}
+    for log in glob.glob(f"{ckpt}/sources/0/*"):
+        with open(log) as f:
+            lines = f.read().splitlines()
+        assert lines[0] == "v1", log
+        for line in lines[1:]:
+            e = json.loads(line)
+            files[e["path"].removeprefix("file://")] = e["batchId"]
+    return files
 
+
+def test_delta_feed_emission_oracle(spark, tmp_path):
+    """``feed/batch=N`` holds exactly the per-key (ts, seq) winner of
+    microbatch N, and only for keys where that winner strictly beats the
+    best winner of every earlier batch — DELETE winners included.  The
+    oracle recomputes each batch's input from the checkpoint's source log.
+
+    Session 2 appends strictly older events for keys session 1 already
+    emitted: the state must suppress every one of them (a late DELETE
+    included), across sessions."""
     from singer_tap_spark import CDCPipeline, PipelineConfig
-    from singer_tap_spark.changelog import generate_changelog, write_changelog
 
     base = str(tmp_path)
-    write_changelog(
-        generate_changelog(spark, 4000, update_frac=0.5, delete_frac=0.1,
-                           dup_frac=0.08),
-        f"{base}/log",
+    split = 2500
+    log = generate_changelog(spark, 5000, update_frac=0.5, delete_frac=0.1,
+                             dup_frac=0.08, ooo_frac=0.2)
+    newer = log.where(f"seq >= {split}")
+    write_changelog(newer, f"{base}/log")
+    cfg = PipelineConfig(
+        changelog_path=f"{base}/log",
+        target_path=f"{base}/tgt",
+        lineage_path=f"{base}/lin.json",
+        checkpoint_dir=f"{base}/ckpt",
+        max_files_per_trigger=4,  # several microbatches per session
     )
-    feeds = {}
-    for impl in ("merge", "stateful"):
-        cfg = PipelineConfig(
-            changelog_path=f"{base}/log",
-            target_path=f"{base}/tgt_{impl}",
-            lineage_path=f"{base}/lin_{impl}.json",
-            checkpoint_dir=f"{base}/ckpt_{impl}",
-            max_files_per_trigger=4,  # several microbatches, same pacing
-            # historical-replay setting: file order is not event-time order,
-            # so a short watermark would make the stateful path DROP
-            # late-arriving rows that the JVM path (no event-time bound)
-            # processes — the one intended semantic difference between them
-            watermark_delay="3650 days",
-        )
-        p = CDCPipeline(spark, cfg)
-        p.run_delta_feed(f"{base}/feed_{impl}", available_now=True, impl=impl)
-        df = spark.read.parquet(f"{base}/feed_{impl}")
-        cols = ["conv_id", "turn_idx", "op", "role", "text", "tool", "ts", "seq"]
-        feeds[impl] = {tuple(r) for r in df.select(*cols).collect()}
-    assert feeds["merge"] == feeds["stateful"]
-    assert len(feeds["merge"]) > 0
-    # DELETE events flow through the feed
-    assert any(r[2] == "DELETE" for r in feeds["merge"])
+    CDCPipeline(spark, cfg).run_delta_feed(f"{base}/feed")
+    n_session1 = len(set(_microbatch_files(f"{base}/ckpt").values()))
+    assert n_session1 >= 2
+
+    # ts = base + seq - lag with lag < 300 s, so every event 300+ seqs below
+    # the split is strictly older (ts and seq) than any session-1 event
+    older = log.where(f"seq < {split - 300}").join(
+        newer.select("conv_id", "turn_idx").distinct(),
+        ["conv_id", "turn_idx"], "left_semi",
+    )
+    assert older.where("op = 'DELETE'").count() > 0
+    older.repartition(2).write.mode("append").partitionBy("shard").parquet(
+        f"{base}/log"
+    )
+    CDCPipeline(spark, cfg).run_delta_feed(f"{base}/feed")
+
+    files = _microbatch_files(f"{base}/ckpt")
+    assert len(set(files.values())) > n_session1
+    con = duckdb.connect()
+    con.execute("CREATE TABLE inputs (path VARCHAR, batch BIGINT)")
+    con.executemany("INSERT INTO inputs VALUES (?, ?)", list(files.items()))
+    cols = "conv_id, turn_idx, op, role, text, tool, ts, seq"
+    con.execute(f"""
+        CREATE TABLE winners AS
+        SELECT batch, {cols} FROM (
+          SELECT i.batch, e.*, row_number() OVER (
+            PARTITION BY i.batch, e.conv_id, e.turn_idx
+            ORDER BY e.ts DESC, e.seq DESC) AS rn
+          FROM read_parquet({list(files)!r}, filename=true) e
+          JOIN inputs i ON e.filename = i.path)
+        WHERE rn = 1
+    """)
+    want = con.execute(f"""
+        SELECT batch, {cols} FROM winners w
+        WHERE NOT EXISTS (
+          SELECT 1 FROM winners p
+          WHERE p.conv_id = w.conv_id AND p.turn_idx = w.turn_idx
+            AND p.batch < w.batch AND (p.ts, p.seq) >= (w.ts, w.seq))
+    """).fetchall()
+    got = con.execute(f"""
+        SELECT batch, {cols}
+        FROM read_parquet('{base}/feed/*/*.parquet', hive_partitioning=true)
+    """).fetchall()
+    assert len(got) == len(set(got))  # one row per key per batch
+    assert set(got) == set(want)
+    assert any(r[3] == "DELETE" for r in want)
+    # session 2 had winners to judge, and every one lost to the state
+    n_late = con.execute(
+        "SELECT count(*) FROM winners WHERE batch >= ?", [n_session1]
+    ).fetchone()[0]
+    assert n_late > 0
+    assert [r for r in want if r[0] >= n_session1] == []
